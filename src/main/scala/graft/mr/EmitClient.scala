@@ -10,8 +10,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * [[EmitClient.adapt]] bridges to the iterator-style
   * [[MapReduceClient]] the kernel executes, so emit-style clients run
-  * through exactly the same `flatMap → groupByKey → flatMapGroups`
-  * plan.
+  * through exactly the same plan: `flatMap`, a shuffle grouped on the
+  * encoded K2 column, `flatMapGroups`.
   */
 trait EmitClient[K1, V1, K2, V2, K3, V3] extends Serializable {
   def map(k1: K1, v1: V1, emit2: (K2, V2) => Unit): Unit

@@ -1,6 +1,8 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -31,6 +33,16 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * Output is an unordered bag, exactly like the reference's
   * mutex-appended `OutputVec` (order nondeterministic, multiset
   * semantics).
+  *
+  * Sorting the output: a global `orderBy` on a kernel Dataset plans a
+  * range exchange, and the range partitioner samples its input in a job
+  * of its own. Over the bare kernel plan that sampling job re-runs the
+  * whole reduce stage (shuffle fetch, key sort, `client.reduce`), and
+  * the range shuffle then runs it again. `persist()` the output before
+  * sorting — `out.toDF(...).persist().orderBy(...)`, then
+  * `spark.catalog.clearCache()` once the result is consumed — and both
+  * read the cached rows, so each key's reduce runs once. The `mr_*`
+  * queries do this through `KernelQueries.sortOnce`.
   */
 object MapReduce {
 
@@ -58,12 +70,35 @@ object MapReduce {
     // at low SF and re-plans skew at high SF) — the harness pins it to
     // the CPU count, and at 100 TB AQE's choice beats any hardcoded one.
     val sized = if (parallelism > 0) input.repartition(parallelism) else input
-    sized
-      .flatMap { case (k1, v1) => client.map(k1, v1) }
-      .groupByKey(_._1)
+    grouped(sized.flatMap { case (k1, v1) => client.map(k1, v1) })
       .flatMapGroups { (k2, pairs) =>
         client.reduce(k2, pairs.map(_._2)).iterator
       }
+  }
+
+  /** Group the mapped (K2, V2) pairs on their ENCODED key column(s)
+    * rather than through `groupByKey(_._1)`. `groupByKey` plans an
+    * `AppendColumns` that calls the key function on every pair and
+    * re-encodes K2 into a second copy of the key column, which then
+    * rides the shuffle next to `_1`. Grouping on `_1` itself does
+    * neither, and groups on the same encoded values.
+    *
+    * A K2 that its encoder writes as top-level columns (a tuple or case
+    * class) is grouped on `_1`'s fields, expanded in declaration order
+    * and named after them: that is the shape the key encoder reads back,
+    * and each shuffle/sort key is a flat column, as in [[runSorted]]'s
+    * value sort. Any other K2 (a primitive, or an `Option` of a struct)
+    * is the single column `_1`. */
+  private def grouped[K2, V2](mapped: Dataset[(K2, V2)])(implicit
+      e2: Encoder[(K2, V2)],
+      ek2: Encoder[K2]): KeyValueGroupedDataset[K2, (K2, V2)] = {
+    val key = mapped.col("_1")
+    val keyCols = mapped.schema("_1").dataType match {
+      case s: StructType if encoderFor(ek2).isSerializedAsStructForTopLevel =>
+        s.fieldNames.toSeq.map(f => key.getField(f).as(f))
+      case _ => Seq(key)
+    }
+    mapped.groupBy(keyCols: _*).as[K2, (K2, V2)]
   }
 
   /** [[run]] with a COMBINER — Hadoop's classic map-side
@@ -92,9 +127,7 @@ object MapReduce {
       ev2: Encoder[V2],
       e3: Encoder[(K3, V3)]): Dataset[(K3, V3)] = {
     val sized = if (parallelism > 0) input.repartition(parallelism) else input
-    sized
-      .flatMap { case (k1, v1) => client.map(k1, v1) }
-      .groupByKey(_._1)
+    grouped(sized.flatMap { case (k1, v1) => client.map(k1, v1) })
       .mapValues(_._2)
       .reduceGroups(combine)
       .flatMap { case (k2, v2) =>
@@ -142,15 +175,16 @@ object MapReduce {
     // per-comparison allocation shows). Scalar V2 sorts on the column
     // itself. NULL handling is identical for the non-null V2 values a
     // typed client emits.
-    val valueField = mapped.schema("_2")
-    val sortCols = valueField.dataType match {
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fieldNames.toSeq.map(f =>
-          org.apache.spark.sql.functions.col(s"_2.$f"))
-      case _ => Seq(org.apache.spark.sql.functions.col("_2"))
+    // The sort columns are resolved against `mapped` itself: an
+    // expanded struct K2 adds grouping columns named after its fields
+    // (a tuple key adds its own `_1` and `_2`), so a by-name `_2` could
+    // be ambiguous.
+    val value = mapped.col("_2")
+    val sortCols = mapped.schema("_2").dataType match {
+      case s: StructType => s.fieldNames.toSeq.map(value.getField)
+      case _ => Seq(value)
     }
-    mapped
-      .groupByKey(_._1)
+    grouped(mapped)
       .flatMapSortedGroups(sortCols: _*) {
         (k2, pairs) => client.reduce(k2, pairs.map(_._2)).iterator
       }

@@ -17,8 +17,9 @@ package graft.mr
   *    but a 100 TB group never has to fit in memory.
   *
   * Both `map` and `reduce` are *flat* (0..N outputs per call), matching
-  * the reference exactly — this is flatMap + groupByKey + flatMapGroups,
-  * NOT map + reduceByKey (SURVEY.md §2.1 "semantics worth tattooing").
+  * the reference exactly — this is flatMap + group by key +
+  * flatMapGroups, NOT map + reduceByKey (SURVEY.md §2.1 "semantics worth
+  * tattooing").
   */
 trait MapReduceClient[K1, V1, K2, V2, K3, V3] extends Serializable {
 

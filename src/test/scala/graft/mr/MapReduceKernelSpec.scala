@@ -103,6 +103,85 @@ class MapReduceKernelSpec extends SparkSpec {
     }
   }
 
+  test("struct K2: run, runCombined and runSorted match the collections model") {
+    import spark.implicits._
+    // A tuple key is grouped on its expanded fields, which are named
+    // _1 and _2 like the mapped pair's own columns: the key must still
+    // group by value equality, and the value sort must still read V2.
+    val counts = new MapReduceClient[Long, String, (Long, String), Long, (Long, String), Long] {
+      def map(k: Long, text: String) =
+        text.split(' ').toSeq.filter(_.nonEmpty).map(w => ((k % 3, w), 1L))
+      def reduce(k: (Long, String), vs: Iterator[Long]) = Seq((k, vs.sum))
+    }
+    val ordered = new MapReduceClient[Long, String, (Long, String), (Long, String),
+        (Long, String), String] {
+      def map(k: Long, text: String) =
+        text.split(' ').toSeq.filter(_.nonEmpty).map(w => ((k % 2, w.take(1)), (k, w)))
+      def reduce(k: (Long, String), vs: Iterator[(Long, String)]) =
+        Seq((k, vs.map { case (a, w) => s"$a:$w" }.mkString("|")))
+    }
+    // An Option of a tuple is encoded as ONE nullable struct column, so
+    // it is grouped on `_1` whole (None is its own group).
+    val optional = new MapReduceClient[Long, String, Option[(Long, String)], Long,
+        String, Long] {
+      def map(k: Long, text: String) =
+        text.split(' ').toSeq.filter(_.nonEmpty)
+          .map(w => (if (w == "c") None else Some((k % 3, w)), 1L))
+      def reduce(k: Option[(Long, String)], vs: Iterator[Long]) =
+        Seq((k.toString, vs.sum))
+    }
+    val word = Gen.oneOf("a", "b", "ab", "ba", "c", "")
+    val docsGen = Gen.listOf(Gen.zip(Gen.choose(0L, 9L),
+      Gen.listOf(word).map(_.mkString(" "))))
+    samples(docsGen, 6).foreach { docs =>
+      val ds = docs.toDS()
+      val want = asMultiset(model(docs, counts))
+      assert(asMultiset(MapReduce.run(ds, counts).collect().toSeq) == want)
+      assert(asMultiset(MapReduce.run(ds, optional).collect().toSeq) ==
+        asMultiset(model(docs, optional)))
+      assert(asMultiset(MapReduce.runCombined(ds, counts,
+        (a: Long, b: Long) => a + b).collect().toSeq) == want)
+      val wantSorted = docs
+        .flatMap { case (k, v) => ordered.map(k, v) }
+        .groupBy(_._1)
+        .toSeq
+        .flatMap { case (k, kvs) =>
+          ordered.reduce(k, kvs.map(_._2).sorted.iterator) }
+      assert(asMultiset(MapReduce.runSorted(ds, ordered).collect().toSeq) ==
+        asMultiset(wantSorted))
+    }
+  }
+
+  test("an ordered kernel query runs each key's reduce once") {
+    import spark.implicits._
+    // A global sort's range partitioner samples its input in a job of
+    // its own; over a bare kernel plan that job re-runs the reduce, so
+    // every key would be reduced twice. KernelQueries.sortOnce (the
+    // helper every ordered mr_* query uses) persists the kernel output
+    // first, so the sampler and the range shuffle read the same rows.
+    val reduces = spark.sparkContext.longAccumulator("reduce calls")
+    val client = new MapReduceClient[Long, String, String, Long, String, Long] {
+      def map(k: Long, text: String) =
+        text.split(' ').toSeq.filter(_.nonEmpty).map(w => (w, 1L))
+      def reduce(w: String, vs: Iterator[Long]) = {
+        reduces.add(1L)
+        Seq((w, vs.sum))
+      }
+    }
+    val docs = (1L to 400L).map(i => (i, s"w${i % 37} w${i % 11} x${i % 5}"))
+    val want = model(docs, client).sortBy(_._1)
+    reduces.reset() // the model above ran reduce on the driver
+    try {
+      val got = graft.queries.KernelQueries
+        .sortOnce(MapReduce.run(docs.toDS().repartition(4), client)
+          .toDF("word", "cnt"), "word")
+        .as[(String, Long)].collect().toSeq
+      assert(got == want)
+      assert(reduces.value == want.size,
+        s"${reduces.value} reduce calls for ${want.size} keys")
+    } finally spark.catalog.clearCache()
+  }
+
   test("runCombined obeys the combiner law: identical output to the plain run") {
     import spark.implicits._
     // For an algebraic client (wordcount-shape sum), the combiner must
@@ -182,7 +261,8 @@ class MapReduceKernelSpec extends SparkSpec {
       .groupBy("word").count()
       .withColumnRenamed("count", "cnt")
       .orderBy("word")
-    assert(got.collect().toSeq == expected.collect().toSeq)
+    try assert(got.collect().toSeq == expected.collect().toSeq)
+    finally spark.catalog.clearCache()
   }
 
   test("emit-style client (reference API shape) matches the iterator-style client") {

@@ -8,8 +8,9 @@ import graft.SparkSpec
 class PlanShapeSpec extends SparkSpec {
 
   private def plan(name: String): String =
-    graft.SparkEntry.queries(name)(spark, sf001)
+    try graft.SparkEntry.queries(name)(spark, sf001)
       .queryExecution.executedPlan.toString
+    finally spark.catalog.clearCache() // drop the query's persists
 
   /** Plan of a GATED (rows-only) query: `gated()` returns a local
     * relation of the checked rows, so the real physical plan must be
@@ -481,14 +482,42 @@ class PlanShapeSpec extends SparkSpec {
     // partition-local sort carrying the value struct (the (ts_us,
     // event_id, event_type) secondary keys) — the whole point over
     // buffering+sorting inside the reduce (O(group) memory on a hot
-    // key). The sort node orders on (grouping key _1, value _2): two
-    // ascending sort columns, no extra exchange.
+    // key). The sort node orders on the grouped key column _1 (the
+    // exchange's own key), then on every field of the value _2 in
+    // declaration order: all ascending, no extra exchange.
     val p = plan("mr_secondary_sort")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       "expected exactly one group shuffle")
-    assert("Sort \\[value#\\d+L? ASC[^,\\]]*, _2#\\d+[.\\w]* ASC[^\\]]*\\], false".r
-        .findFirstIn(p).isDefined,
+    val sortOnKeyThenValue = ("Sort \\[_1#(\\d+)L? ASC[^,\\]]*, " +
+      "_2#(\\d+)\\._1 ASC[^,\\]]*, _2#\\2\\._2 ASC[^,\\]]*, " +
+      "_2#\\2\\._3 ASC[^,\\]]*\\], false").r
+    val m = sortOnKeyThenValue.findFirstMatchIn(p)
+    assert(m.isDefined,
       "secondary sort value keys did not reach the shuffle-side sort")
+    assert(p.contains(s"Exchange hashpartitioning(_1#${m.get.group(1)}L, "),
+      "the sort's key is not the group exchange's key")
+  }
+
+  test("kernel groups on the encoded key column, no per-pair key function") {
+    // groupByKey(_._1) would plan an AppendColumns that deserializes
+    // every pair and re-encodes its key into a second shuffled column.
+    val p = plan("mr_wordcount")
+    assert(!p.contains("AppendColumns"), "kernel went back to a key function")
+    assert("Exchange hashpartitioning\\(_1#\\d+, ".r.findFirstIn(p).isDefined,
+      "group exchange does not hash the mapped pair's _1 column")
+  }
+
+  test("ordered kernel queries sort a cached reduce output") {
+    // KernelQueries.sortOnce: the range exchange's sampling job reads
+    // the cached kernel output instead of re-running the reduce.
+    val underRange = ("Exchange rangepartitioning\\([^\\n]*\\n\\s*\\+- " +
+      "InMemoryTableScan [^\\n]*\\n\\s*\\+- InMemoryRelation ").r
+    Seq("mr_wordcount", "mr_charcount", "mr_combined_wordcount", "mr_join",
+        "mr_count_of_counts", "mr_secondary_sort", "mr_seq_pattern",
+        "mr_grouped_agg").foreach { q =>
+      assert(underRange.findFirstIn(plan(q)).isDefined,
+        s"$q: no InMemoryRelation under its range exchange")
+    }
   }
 
   test("cdc apply is one keyed full-outer merge, no extra joins") {
